@@ -7,6 +7,10 @@ import org.apache.spark.sql.functions.col
 /** Layout-preserving compaction for the persisted append-index
   * families (MinHash, Hamming, Winnow, CDC, IVF, PQ, IVF-PQ — r13
   * verdict ask #1), modeled on [[graft.operators.Catalog.compact]].
+  * The MinHash, Hamming, Winnow and CDC families share one layout,
+  * sidecar codec, write and probe/fold path in [[BucketedIndex]]; the
+  * five index-backed streams reach [[maybeCompact]] through the one
+  * stream skeleton [[graft.streaming.IndexedStream]].
   *
   * Why it exists: every [[graft.ext.DocDedup.appendToMinHashIndex]]-
   * style append (and every streaming micro-batch that calls one)
@@ -123,9 +127,9 @@ object IndexMaintenance {
     }
   }
 
-  /** Fixed-cadence form (the pre-r15 signature; the five index-backed
-    * streams pass their `compactEvery` knob through here when no cost
-    * threshold is configured).
+  /** Fixed-cadence form (the pre-r15 signature; the index-backed
+    * streams go through the [[CompactPolicy]] form via
+    * [[graft.streaming.IndexedStream]]).
     */
   def maybeCompact(every: Option[Int], batchId: Long,
                    gaugePrefix: String, dir: String)

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.Trigger
 import graft.ext.Cdc
 
 /** Incremental shift-invariant BINARY dedup against a persisted CDC
@@ -15,7 +13,10 @@ import graft.ext.Cdc
   * probes the accumulated [[Cdc.buildCdcIndex]]-layout index
   * (partition-pruned to the batch's hash buckets), emits its
   * within-batch pairs through the join form, then appends its own
-  * chunk identities so later batches dedup against it.
+  * chunk identities so later batches dedup against it — all in the
+  * fused [[Cdc.foldCdcBatch]] kernel, from ONE chunking of the batch
+  * (the unfused probe + pairs + append form chunked every blob four
+  * times). The stream skeleton is [[IndexedStream]].
   *
   * Like the winnow stream, NO blob payload store is needed: the chunk
   * identity `(chash, csize, csum)` is self-verifying, so state is ONE
@@ -35,6 +36,8 @@ object StreamingCdcDup {
   /** Layout under `workDir`:
     *   index/   — hb-partitioned CDC chunk-identity index
     *   matches/ — pair rows (id_a, id_b, n_shared), batch_id-partitioned
+    * First batch builds the index with the caller's parameters;
+    * afterwards the sidecar's pinned chunking regime wins.
     */
   def start(spark: SparkSession, inputDir: String, workDir: String,
             minSize: Int = 2048, avgBits: Int = 13, maxSize: Int = 65536,
@@ -45,59 +48,12 @@ object StreamingCdcDup {
             compactEvery: Option[Int] = None,
             compactMaxFiles: Option[Long] = None,
             lease: graft.ext.WriterLock.Lease =
-              graft.ext.WriterLock.Lease()): MaintainedStream = {
-    // cadence and/or cost trigger — see IndexMaintenance.CompactPolicy
-    val policy = graft.ext.IndexMaintenance.CompactPolicy(
-      every = compactEvery, maxDataFiles = compactMaxFiles)
-    val indexPath = s"$workDir/index"
-    // the index's failover SLO: every lock the stream takes on it
-    // heartbeats/observes at this lease (WriterLock.setLease doc has
-    // the failover-latency vs no-steal-margin tradeoff)
-    graft.ext.WriterLock.setLease(indexPath, lease)
-    val matchesPath = s"$workDir/matches"
-    val fs = new org.apache.hadoop.fs.Path(workDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val reader = spark.readStream
-      .schema(StructType(Seq(StructField("id", LongType),
-        StructField("blob", BinaryType))))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    // events baseline BEFORE the query starts: an AvailableNow first
-    // batch can fire before start() returns
-    val baseline = graft.ext.MaintenanceEvents.countsFor(Seq(indexPath))
-    val q = reader.parquet(inputDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", s"$workDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // registry-delta cleanup (the StreamingNearDup convention)
-        val sc = spark.sparkContext
-        val beforeCp = sc.getPersistentRDDs.keySet
-        try {
-          // The fused kernel: cross-index + within-batch pairs →
-          // matches/batch_id=N, then the index append — from ONE
-          // chunking of the batch (the unfused probe + pairs + append
-          // form chunked every blob four times). First batch builds
-          // the index with the caller's parameters; afterwards the
-          // sidecar's pinned chunking regime wins. No batch
-          // checkpoint: file-source micro-batches re-read cheaply, and
-          // the fold persists the chunk cache, the one genuinely
-          // multi-consumed intermediate.
-          Cdc.foldCdcBatch(batch, "id", "blob", indexPath,
-            s"$matchesPath/batch_id=$batchId",
-            minSize, avgBits, maxSize, hashBuckets,
-            maxDocsPerChunk, minShared)
-          // between-batches = the single writer's maintenance window
-          graft.ext.IndexMaintenance.maybeCompact(policy, batchId,
-            "streamCdcDup", indexPath,
-            graft.ext.IndexMaintenance.dataFileCount(spark, indexPath))(
-            Cdc.compactCdcIndex(spark, indexPath))
-        } finally {
-          sc.getPersistentRDDs.filterNot(kv => beforeCp(kv._1)).values
-            .foreach(_.unpersist(false))
-        }
-        ()
-      }
-      .start()
-    new MaintainedStream(q, Seq(indexPath), baseline)
-  }
+              graft.ext.WriterLock.Lease()): MaintainedStream =
+    IndexedStream.start(spark, inputDir, workDir, IndexedStream.BlobSchema,
+        "streamCdcDup", trigger, maxFilesPerTrigger, compactEvery,
+        compactMaxFiles, lease)(Cdc.compactCdcIndex(spark, _)) {
+      (batch, index, matches) =>
+        Cdc.foldCdcBatch(batch, "id", "blob", index, matches, minSize,
+          avgBits, maxSize, hashBuckets, maxDocsPerChunk, minShared)
+    }
 }
