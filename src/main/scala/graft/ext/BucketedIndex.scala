@@ -1,7 +1,9 @@
 package graft.ext
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** The persisted bucketed-index layer under the MinHash, Hamming,
@@ -20,7 +22,8 @@ import org.apache.spark.sql.functions._
   *   - the probe skeleton ([[probe]]): one `groupBy(coords).count`
   *     collect gives both the touched partitions and the probe row
   *     count, then the coordinate and empty-index guards, the
-  *     partition-column prune and the broadcast row guard;
+  *     partition-column prune (read with the projection's schema, so no
+  *     schema-inference job runs) and the broadcast row guard;
   *   - the streaming fold skeleton ([[fold]]): one clustered, persisted
   *     projection of the batch feeds the pruned probe, the matches
   *     write (cross ∪ within) and the index append.
@@ -77,12 +80,19 @@ private[graft] object BucketedIndex {
       idx.join(side, keys).where(col("id_a") =!= col("id"))
   }
 
-  /** Persists a plan registers; released once its output is written or
-    * checkpointed.
+  /** Local checkpoints a plan registers; released once its output is
+    * written or checkpointed.
     */
   final class Scope {
-    private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def cache(df: DataFrame): DataFrame = { held += df.persist(); held.last }
+    private val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    /** `df` computed exactly once, now: every later reader scans the
+      * checkpoint, so no two exchanges first-compute the same blocks.
+      */
+    def checkpoint(df: DataFrame): DataFrame = {
+      val cp = df.localCheckpoint()
+      held ++= cp.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      cp
+    }
     private[BucketedIndex] def release(): Unit =
       held.reverseIterator.foreach(_.unpersist())
   }
@@ -168,7 +178,8 @@ private[graft] object BucketedIndex {
   /** One action over `rows` (index-shaped): its distinct partition
     * coordinates and its row count. None when the batch touches no
     * partition or the index holds no data files; otherwise the
-    * partition-pruned read and the probe side.
+    * partition-pruned read (with `rows.schema`, which every index file
+    * was written from) and the probe side.
     */
   private def prune(ss: SparkSession, path: String, f: Family, op: String,
                     rows: DataFrame, indexExists: Boolean,
@@ -194,7 +205,9 @@ private[graft] object BucketedIndex {
         .isin(coords.map(_.foldLeft(0L)(_ * 4096L + _)): _*)
     val side = f.probeSide(rows)
     val nRows = counts.map(_.getLong(f.partCols.length)).sum
-    Some(new Probe(ss.read.parquet(path).where(filter),
+    // the files hold the projection's own columns: reading with its
+    // schema skips the parquet schema-inference job
+    Some(new Probe(ss.read.schema(rows.schema).parquet(path).where(filter),
       if (nRows <= broadcastLimit) broadcast(side) else side, f.keys))
   }
 
@@ -232,8 +245,9 @@ private[graft] object BucketedIndex {
     * columns. Parameters come from the sidecar, or from `params` when
     * no index exists yet (the append then writes the initial layout and
     * the sidecar). Actions: the coords collect (which materializes the
-    * cache), whatever `verify` spends, the matches write of
-    * `verify(cross ∪ within)`, and the append straight from the cache —
+    * cache), whatever `verify` spends (a [[Scope.checkpoint]] of the
+    * pairs, for MinHash), the matches write of `verify(cross ∪ within)`,
+    * and the append straight from the cache —
     * shuffle-free, under the writer lock (reentrant on a stream's
     * foreachBatch thread, which may also hold it around compaction).
     */

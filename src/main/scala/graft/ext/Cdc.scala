@@ -247,7 +247,7 @@ object Cdc {
       s"cdc: hashBuckets must be in [1,4096], got $hashBuckets")
   })
 
-  private def cdcRows(df: DataFrame, idCol: String, binCol: String)(
+  private[ext] def cdcRows(df: DataFrame, idCol: String, binCol: String)(
       p: Seq[Int]): DataFrame =
     cdcChunks(df.select(col(idCol).as("id"), col(binCol)), binCol,
         p(0), p(1), p(2))

@@ -495,7 +495,7 @@ object DocDedup {
       s"sigBuckets must be in [1,4096], got $sigBuckets")
   })
 
-  private def minHashRows(df: DataFrame, idCol: String, textCol: String)(
+  private[ext] def minHashRows(df: DataFrame, idCol: String, textCol: String)(
       p: Seq[Int]): DataFrame = {
     graft.functions.VecExpressions.register(df.sparkSession)
     bandedSignatures(df, idCol, textCol, p(0), p(1), p(2))
@@ -575,55 +575,38 @@ object DocDedup {
       : IndexMaintenance.CompactStats =
     IndexMaintenance.compactIndex(ss, path, MinHashIndex.partCols)
 
-  /** Exact n-gram Jaccard verify of candidate pairs `cand` (id_a, id_b)
-    * whose id_a side is `batch` and whose id_b side is a `corpus`
-    * document — or, with `withinBatch`, possibly another `batch`
-    * document. Re-shingles the batch and only the candidate corpus
-    * documents, BOTH sides in one cache so one count (timed under
-    * `warmStage`) materializes everything, `cand` included via the
-    * semi-join inside side "b" — eager warming matters: concurrent
-    * first-computation of the same persisted blocks from several
-    * exchange threads serializes on the block locks (observed
-    * multi-minute stalls).
+  /** Exact n-gram Jaccard verify of candidate pairs `cand` (id_a, id_b),
+    * already materialized and distinct, whose id_a side is `batch` and
+    * whose id_b side is a `corpus` document — or, with `withinBatch`,
+    * possibly another `batch` document. One row per document carries
+    * its distinct word-bigram set (only the candidate corpus documents
+    * are semi-joined out of `corpus`), and each pair compares the two
+    * sets directly: common = |A ∩ B|, na = |A|, nb = |B|, kept when
+    * den·common ≥ num·(na + nb − common). Documents with no bigrams
+    * have no set row and drop out.
     */
-  private def verifyShingled(scope: BucketedIndex.Scope, batch: DataFrame,
-                             corpus: DataFrame, idCol: String,
-                             textCol: String, cand: DataFrame, num: Int,
-                             den: Int, warmStage: String,
+  private def verifyShingled(batch: DataFrame, corpus: DataFrame,
+                             idCol: String, textCol: String,
+                             cand: DataFrame, num: Int, den: Int,
                              withinBatch: Boolean): DataFrame = {
-    val corpusCand = corpus.select(col(idCol), col(textCol))
-      .join(cand.select(col("id_b").as(idCol)).distinct(), Seq(idCol),
-        "left_semi")
-    val sh = scope.cache(shingles(batch, idCol, textCol)
-      .withColumn("side", lit("a"))
-      .unionByName(shingles(corpusCand, idCol, textCol)
-        .withColumn("side", lit("b"))))
-    graft.Instr.timed(warmStage)(sh.count())
-    // within-batch id_b values are BATCH docs: resolve them against
-    // both sides (batch and corpus ids are disjoint by contract)
-    val shB = if (withinBatch) sh.drop("side")
-      else sh.where(col("side") === "b").drop("side")
-    val common = sh.where(col("side") === "a").drop("side")
-      .toDF("id_a", "shingle")
-      .join(cand, "id_a")
-      .join(shB.toDF("id_b", "shingle"), Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("common"))
-    // ONE (side, id) aggregation feeds both count sides: the two
-    // per-side groupBys had non-identical children (different side
-    // filters below the exchange), so each paid its own scan +
-    // exchange over the shingle cache; keyed (side, id) the subtree
-    // is identical and the second branch is a ReusedExchange.
-    val counts = sh.groupBy("side", "id").agg(count(lit(1)).as("n"))
-    val na = counts.where(col("side") === "a")
-      .select(col("id").as("id_a"), col("n").as("na"))
-    val nb = if (withinBatch) counts.groupBy("id").agg(sum("n").as("nb"))
-        .toDF("id_b", "nb")
-      else counts.where(col("side") === "b")
-        .select(col("id").as("id_b"), col("n").as("nb"))
-    common.join(na, "id_a").join(nb, "id_b")
+    def sets(df: DataFrame): DataFrame =
+      df.select(col(idCol).as("id"),
+          array_distinct(TextAnalysis.wordBigrams(col(textCol))).as("s"))
+        .where(size(col("s")) > 0)
+    val corpusCand = sets(corpus.join(cand.select(col("id_b").as(idCol)),
+      Seq(idCol), "left_semi"))
+    // within-batch id_b values are BATCH docs (batch and corpus ids are
+    // disjoint by contract)
+    val b = if (withinBatch) sets(batch).unionByName(corpusCand)
+      else corpusCand
+    cand.join(sets(batch).toDF("id_a", "sa"), "id_a")
+      .join(b.toDF("id_b", "sb"), "id_b")
+      .select(col("id_a"), col("id_b"),
+        size(array_intersect(col("sa"), col("sb"))).cast("long").as("common"),
+        size(col("sa")).cast("long").as("na"),
+        size(col("sb")).cast("long").as("nb"))
       .where(lit(den) * col("common") >=
         lit(num) * (col("na") + col("nb") - col("common")))
-      .select("id_a", "id_b", "common", "na", "nb")
   }
 
   /** Near-dup pairs of a PROBE batch against a [[buildMinHashIndex]]
@@ -651,9 +634,13 @@ object DocDedup {
     * Three actions (the r12 bench attribution showed this function's
     * cost is ACTION COUNT, not compute): one groupBy-collect (coords
     * AND row count, materializing the persisted banded probe rows),
-    * one cache-warming count over the union of both shingle sides,
-    * the final checkpoint. No determinism orderBy (guide §2.4): every
-    * caller joins/aggregates the pair set or re-orders its own output.
+    * the local checkpoint of the distinct candidate pairs (computed
+    * once, before the verify reads them), and the final checkpoint of
+    * the verify, which compares one bigram set per document
+    * ([[verifyShingled]]). The pruned index read uses the projection's
+    * schema, so no schema-inference job runs. No determinism orderBy
+    * (guide §2.4): every caller joins/aggregates the pair set or
+    * re-orders its own output.
     */
   def probeMinHashIndex(probes: DataFrame, corpus: DataFrame,
                         idCol: String, textCol: String, path: String,
@@ -663,10 +650,10 @@ object DocDedup {
     BucketedIndex.probe(probes.sparkSession, path, MinHashIndex,
         "probeMinHashIndex", broadcastLimit, Some("probeMinHash"))(
         minHashRows(probes, idCol, textCol)) { (p, scope) =>
-      val cand = scope.cache(p.joined()
+      val cand = scope.checkpoint(p.joined()
         .select(col("id_a"), col("id").as("id_b")).distinct())
-      verifyShingled(scope, probes, corpus, idCol, textCol, cand, num, den,
-        "probeMinHash.warm", withinBatch = false)
+      verifyShingled(probes, corpus, idCol, textCol, cand, num, den,
+        withinBatch = false)
     }.getOrElse(probes.select(col(idCol).as("id_a"), col(idCol).as("id_b"),
       lit(0L).as("common"), lit(0L).as("na"), lit(0L).as("nb"))
       .where(lit(false)))
@@ -674,13 +661,14 @@ object DocDedup {
   /** The streaming micro-batch kernel behind
     * [[graft.streaming.StreamingNearDup]]: cross-index matches,
     * within-batch matches, the matches write, AND the index
-    * append/build — banding and shingling the batch ONCE and spending
-    * exactly four Spark actions ([[BucketedIndex.fold]]: the coords
-    * collect, the shingle cache warm count, the matches write that
-    * doubles as the verify materialization, the append from the banded
-    * cache). The unfused form (probeMinHashIndex + minHashPairs + two
-    * writes) costs eight: the r13 bench attribution showed the
-    * per-micro-batch cost of the streaming gates is ACTION COUNT.
+    * append/build — banding the batch ONCE and spending exactly four
+    * Spark actions ([[BucketedIndex.fold]]: the coords collect, the
+    * local checkpoint of the distinct cross ∪ within candidate pairs,
+    * the matches write that doubles as the [[verifyShingled]] run, the
+    * append from the banded cache). The unfused form (probeMinHashIndex
+    * + minHashPairs + two writes) costs eight: the r13 bench attribution
+    * showed the per-micro-batch cost of the streaming gates is ACTION
+    * COUNT.
     *
     * Match rows are the [[probeMinHashIndex]] shape. Cross-index pairs
     * come out (id_a = batch id, id_b = indexed id); within-batch pairs
@@ -718,8 +706,8 @@ object DocDedup {
           .where(col("id_a") < col("id_b"))
           .select("id_a", "id_b")
       },
-      verify = (pairs, scope) => verifyShingled(scope, batch, corpus, idCol,
-        textCol, scope.cache(pairs.distinct()), num, den, "foldMinHash.warm",
+      verify = (pairs, scope) => verifyShingled(batch, corpus, idCol,
+        textCol, scope.checkpoint(pairs.distinct()), num, den,
         withinBatch = true))
 
   // ------------------------------------------------------- clustering
@@ -967,7 +955,7 @@ object DocDedup {
       s"qBuckets must be in [1,4096], got $qBuckets")
   })
 
-  private def hammingRows(sig: DataFrame, idCol: String, hashCol: String)(
+  private[ext] def hammingRows(sig: DataFrame, idCol: String, hashCol: String)(
       p: Seq[Int]): DataFrame =
     sig.select(col(idCol).as("id"), col(hashCol).as("sh"))
       .select(col("id"), col("sh"), quarterRows(col("sh")))

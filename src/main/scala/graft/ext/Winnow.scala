@@ -174,7 +174,7 @@ object Winnow {
     * the original corpus text back (8 chars/row; the price of making
     * the index self-contained).
     */
-  private def winnowRows(df: DataFrame, idCol: String, textCol: String)(
+  private[ext] def winnowRows(df: DataFrame, idCol: String, textCol: String)(
       p: Seq[Int]): DataFrame = {
     val Seq(k, w, fpBuckets) = p
     val fpUdf = udf((text: String) =>

@@ -2,12 +2,15 @@ package graft.ext
 
 import graft.SparkFunSuite
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.types.StructType
 
 /** The shared sidecar codec under every bucketed-index family: build
   * output keeps its exact sidecar bytes and leaves no temp residue, and
   * a malformed sidecar (the empty file a crash between create and write
   * used to leave) is a typed error on append, probe and fold — never a
-  * NumberFormatException/MatchError on every replay.
+  * NumberFormatException/MatchError on every replay. The probe reads
+  * the index with the family projection's schema, so that schema must
+  * be what parquet would infer from the files.
   */
 class BucketedIndexSpec extends SparkFunSuite {
 
@@ -51,6 +54,32 @@ class BucketedIndexSpec extends SparkFunSuite {
         typed("probe")(c.probe(b1, b0, path))
         typed("fold")(c.fold(b1, b0, path, s"$dir/m"))
       }
+    }
+
+    test(s"${c.name} index: parquet infers the projection's schema") {
+      val (b0, _) = c.batches(spark)
+      val path = tempDir(s"bi-schema-${c.name}") + "/index"
+      c.build(b0, path)
+      // names and types; field order and nullability do not matter to
+      // the by-name read. A renamed column would silently read as null.
+      def fields(s: StructType) = s.fields.map(f => f.name -> f.dataType).toMap
+      assert(fields(spark.read.parquet(path).schema) == fields(c.rows(b0).schema))
+    }
+
+    test(s"${c.name} probe submits no schema-inference job") {
+      val (b0, b1) = c.batches(spark)
+      val dir = tempDir(s"bi-noinfer-${c.name}")
+      // parquet-backed inputs: a local relation's scan is itself a
+      // parallelize job; their own schemas are inferred here, up front
+      b0.write.parquet(s"$dir/b0"); b1.write.parquet(s"$dir/b1")
+      val (p0, p1) = (spark.read.parquet(s"$dir/b0"),
+        spark.read.parquet(s"$dir/b1"))
+      c.build(p0, s"$dir/index")
+      val (n, jobs) = JobCapture(spark)(c.probe(p1, p0, s"$dir/index").count())
+      assert(n > 0) // twins planted: the pruned read really ran
+      val inferring = jobs.filter(JobCapture.parallelizes).map(_.jobId)
+      assert(jobs.nonEmpty && inferring.isEmpty,
+        s"schema-inference jobs ${inferring.mkString(",")}")
     }
   }
 }

@@ -11,6 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * @param sidecar      the sidecar file name
   * @param sidecarBytes the sidecar content `build` must write
   * @param matchCols    the match row columns compared across forms
+  * @param rows         the family's index projection at `build`'s params
   * @param probe        (probes, corpus, index path) → matches
   * @param within       the non-index within-batch pair form
   * @param fold         (batch, corpus so far, index path, matches path)
@@ -19,6 +20,7 @@ final case class IndexFamilyCase(
     name: String, sidecar: String, sidecarBytes: String,
     matchCols: Seq[String],
     batches: SparkSession => (DataFrame, DataFrame),
+    rows: DataFrame => DataFrame,
     build: (DataFrame, String) => Unit,
     append: (DataFrame, String) => Unit,
     probe: (DataFrame, DataFrame, String) => DataFrame,
@@ -39,6 +41,7 @@ object IndexFamilyCase {
 
   val minHash = IndexFamilyCase("minhash", "_graft_minhash_meta", "8,4,4",
     Seq("id_a", "id_b", "common", "na", "nb"), textBatches,
+    rows = DocDedup.minHashRows(_, "id", "text")(Seq(8, 4, 4)),
     build = (b, p) => DocDedup.buildMinHashIndex(b, "id", "text", p,
       bands = 8, rows = 4, sigBuckets = 4),
     append = (b, p) => DocDedup.appendToMinHashIndex(b, "id", "text", p),
@@ -60,6 +63,7 @@ object IndexFamilyCase {
         Seq((101L, base ^ 1L), (102L, base ^ 1L),
           (103L, 0x1111222233334444L)).toDF("id", "sh"))
     },
+    rows = DocDedup.hammingRows(_, "id", "sh")(Seq(8)),
     build = DocDedup.buildHammingIndex(_, "id", "sh", _, qBuckets = 8),
     append = DocDedup.appendToHammingIndex(_, "id", "sh", _),
     probe = (b, _, p) => DocDedup.probeHammingIndex(b, "id", "sh", p, 2),
@@ -69,6 +73,7 @@ object IndexFamilyCase {
 
   val winnow = IndexFamilyCase("winnow", "_graft_winnow_meta", "8,4,8",
     Seq("id_a", "id_b", "n_matches"), textBatches,
+    rows = Winnow.winnowRows(_, "id", "text")(Seq(8, 4, 8)),
     build = Winnow.buildWinnowIndex(_, "id", "text", _, k = 8, w = 4,
       fpBuckets = 8),
     append = Winnow.appendToWinnowIndex(_, "id", "text", _),
@@ -89,6 +94,7 @@ object IndexFamilyCase {
       (Seq((1L, blob(1)), (2L, blob(2))).toDF("id", "blob"),
         Seq((101L, blob(11)), (102L, blob(12))).toDF("id", "blob"))
     },
+    rows = Cdc.cdcRows(_, "id", "blob")(Seq(256, 9, 4096, 8)),
     build = Cdc.buildCdcIndex(_, "id", "blob", _, 256, 9, 4096, 8),
     append = Cdc.appendToCdcIndex(_, "id", "blob", _),
     probe = (b, _, p) => Cdc.probeCdcIndex(b, "id", "blob", p),
